@@ -25,7 +25,9 @@ triple-join restated in SQL, which DuckDB computes directly.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from collections.abc import Callable
+
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 
@@ -95,6 +97,64 @@ def triangle_total(edges: DataFrame, src: str = "src", dst: str = "dst") -> int:
     return wedges.join(closer, ["u", "v"]).count()
 
 
+def _relax(
+    e: DataFrame,
+    start: DataFrame,
+    step: Callable[[DataFrame], DataFrame],
+    max_rounds: int,
+    metrics: dict | None,
+) -> DataFrame:
+    """Min-label frontier relaxation shared by the path operators.
+
+    ``start`` is ``(node, <label>)``; ``e`` has the source node in ``u``.
+    Each round ``step`` maps ``frontier ⋈ e`` (on ``node = u``) to
+    candidate ``(node, <label>)`` rows; a node's label only ever moves to
+    a STRICTLY smaller candidate, and only nodes that improved form the
+    next frontier, so the edge join is O(frontier out-edges). Two jobs
+    per round: one full outer join folds the candidates into the label
+    table and flags the improved nodes (checkpointed), and a
+    ``limit(1)`` probe on the flag decides the stop. Stops when nothing
+    improved (``metrics["converged"]``) or after ``max_rounds``
+    (``metrics["rounds"]``). Deterministic: min-aggregates only."""
+    lab = start.columns[1]
+    dist = start.localCheckpoint(eager=True)
+    frontier = dist
+    rounds = 0
+    converged = False
+    for _ in range(max_rounds):
+        rounds += 1
+        best = (
+            step(frontier.join(e, frontier.node == e.u))
+            .groupBy("node")
+            .agg(F.min(lab).alias("_cand"))
+        )
+        dist = (
+            dist.select("node", lab)
+            .join(best, "node", "full_outer")
+            .select(
+                "node",
+                F.least(lab, "_cand").alias(lab),  # least() skips NULLs
+                F.coalesce(F.col("_cand") < F.col(lab), F.col(lab).isNull())
+                .alias("_improved"),
+            )
+            .localCheckpoint(eager=True)
+        )
+        frontier = dist.filter("_improved").select("node", lab)
+        if frontier.limit(1).count() == 0:
+            converged = True
+            break
+    if metrics is not None:
+        metrics["rounds"] = rounds
+        # an emptied frontier (true completion) vs the round bound: on
+        # truncation the labels are those of paths of <= max_rounds edges
+        metrics["converged"] = converged
+    return dist.select("node", lab)
+
+
+def _seed_nodes(seeds: DataFrame) -> DataFrame:
+    return seeds.select(F.col(seeds.columns[0]).alias("node")).distinct()
+
+
 def shortest_paths(
     edges: DataFrame,
     seeds: DataFrame,
@@ -107,14 +167,16 @@ def shortest_paths(
     ``(node_id, distance)`` for every node reachable from ``seeds``
     (a one-column DataFrame of seed node ids, distance 0).
 
-    The standard iterative-frontier formulation: each round joins only the
-    FRONTIER (nodes first reached last round) against the edge table, so
-    per-round work is O(edges out of the frontier), not O(all edges); the
-    settled-distance table only ever grows by anti-join novelty. Rounds =
-    graph eccentricity, each one equi-join + one min-agg + one anti-join —
-    all on node-id keys (uniform after hash partitioning). For 100 TB
-    graphs the edge table should be pre-bucketed on ``src`` so every
-    round's join is storage-partitioned (no re-shuffle of the big side).
+    The standard iterative-frontier formulation (:func:`_relax`): each
+    round joins only the FRONTIER (nodes first reached last round)
+    against the edge table, so per-round work is O(edges out of the
+    frontier), not O(all edges). Every node settled before round r has a
+    distance below r, so "strictly improved" is exactly "newly reached".
+    Rounds = graph eccentricity, each one equi-join + one min-agg + one
+    improvement join — all on node-id keys (uniform after hash
+    partitioning). For 100 TB graphs the edge table should be
+    pre-bucketed on ``src`` so every round's join is storage-partitioned
+    (no re-shuffle of the big side).
 
     Deterministic: distances are unique minima, independent of partition
     order. Convergence: stops when a round yields no new nodes (one count
@@ -125,37 +187,14 @@ def shortest_paths(
     high-eccentricity graphs.
     """
     e = edges.select(F.col(src).alias("u"), F.col(dst).alias("v")).distinct()
-    dist = (
-        seeds.select(F.col(seeds.columns[0]).alias("node"))
-        .distinct()
-        .withColumn("distance", F.lit(0).cast("long"))
-        .localCheckpoint(eager=True)
+    start = _seed_nodes(seeds).withColumn("distance", F.lit(0).cast("long"))
+    dist = _relax(
+        e, start,
+        lambda j: j.select(
+            F.col("v").alias("node"), (F.col("distance") + 1).alias("distance")
+        ),
+        max_iter, metrics,
     )
-    frontier = dist
-    rounds = 0
-    converged = False
-    for _ in range(max_iter):
-        rounds += 1
-        reached = (
-            frontier.join(e, frontier.node == e.u)
-            .select(F.col("v").alias("node"), (F.col("distance") + 1).alias("distance"))
-            .groupBy("node")
-            .agg(F.min("distance").alias("distance"))
-        )
-        new = reached.join(dist.select("node"), "node", "left_anti").localCheckpoint(
-            eager=True
-        )
-        if new.limit(1).count() == 0:
-            converged = True
-            break
-        dist = dist.unionByName(new).localCheckpoint(eager=True)
-        frontier = new
-    if metrics is not None:
-        metrics["rounds"] = rounds
-        # distinguish an emptied frontier (true BFS completion) from
-        # max_iter exhaustion: on truncation, distances are a PARTIAL
-        # lower-frontier — absent nodes are not necessarily unreachable.
-        metrics["converged"] = converged
     return dist.select(F.col("node").alias("node_id"), "distance")
 
 
@@ -179,12 +218,13 @@ def weighted_shortest_paths(
     achieves. If relaxation quiesces earlier (no cost improved), that is
     the true unbounded shortest path and the loop stops.
 
-    Same frontier discipline as :func:`shortest_paths` — each round
-    relaxes only out-edges of nodes whose cost IMPROVED last round, so
-    per-round work is O(frontier out-edges); parallel edges collapse to
-    their min weight once, up front. Costs are exact BIGINT sums (no
-    float drift between engines). For 100 TB graphs pre-bucket the edge
-    table on ``src`` so every round's join is storage-partitioned.
+    Same frontier discipline as :func:`shortest_paths` (:func:`_relax`)
+    — each round relaxes only out-edges of nodes whose cost IMPROVED
+    last round, so per-round work is O(frontier out-edges); parallel
+    edges collapse to their min weight once, up front. Costs are exact
+    BIGINT sums (no float drift between engines). For 100 TB graphs
+    pre-bucket the edge table on ``src`` so every round's join is
+    storage-partitioned.
 
     Deterministic: min-aggregates only. Pass ``metrics`` to read
     ``rounds`` and ``converged`` (True = quiesced before the bound, the
@@ -199,42 +239,14 @@ def weighted_shortest_paths(
         .groupBy("u", "v")
         .agg(F.min("w").alias("w"))
     )
-    dist = (
-        seeds.select(F.col(seeds.columns[0]).alias("node"))
-        .distinct()
-        .withColumn("cost", F.lit(0).cast("long"))
-        .localCheckpoint(eager=True)
+    start = _seed_nodes(seeds).withColumn("cost", F.lit(0).cast("long"))
+    dist = _relax(
+        e, start,
+        lambda j: j.select(
+            F.col("v").alias("node"), (F.col("cost") + F.col("w")).alias("cost")
+        ),
+        max_hops, metrics,
     )
-    frontier = dist
-    rounds = 0
-    converged = False
-    for _ in range(max_hops):
-        rounds += 1
-        relaxed = (
-            frontier.join(e, frontier.node == e.u)
-            .select(F.col("v").alias("node"), (F.col("cost") + F.col("w")).alias("cost"))
-            .groupBy("node")
-            .agg(F.min("cost").alias("cost"))
-        )
-        improved = (
-            relaxed.alias("r")
-            .join(dist.alias("d"), "node", "left")
-            .filter(F.col("d.cost").isNull() | (F.col("r.cost") < F.col("d.cost")))
-            .select("node", F.col("r.cost").alias("cost"))
-            .localCheckpoint(eager=True)
-        )
-        if improved.limit(1).count() == 0:
-            converged = True
-            break
-        dist = (
-            dist.join(improved.select("node"), "node", "left_anti")
-            .unionByName(improved)
-            .localCheckpoint(eager=True)
-        )
-        frontier = improved
-    if metrics is not None:
-        metrics["rounds"] = rounds
-        metrics["converged"] = converged
     return dist.select(F.col("node").alias("node_id"), F.col("cost"))
 
 
@@ -285,7 +297,8 @@ def temporal_reachability(
     propagating per-node minima loses nothing (Wu et al., "Path Problems
     in Temporal Graphs", VLDB'14).
 
-    Same frontier discipline and hop-bound contract as
+    Same frontier discipline (:func:`_relax`, with the time order as a
+    filter in its step) and hop-bound contract as
     :func:`weighted_shortest_paths`: after round r the table holds
     exactly the min arrival over time-respecting paths of <= r edges, so
     truncation is a defined semantics, not an approximation; quiescing
@@ -299,42 +312,13 @@ def temporal_reachability(
         F.col(dst).alias("v"),
         F.col(time).cast("long").alias("t"),
     ).distinct()
-    seed_df = (
-        seeds.select(F.col(seeds.columns[0]).alias("node"))
-        .distinct()
-        .localCheckpoint(eager=True)
+    seed_df = _seed_nodes(seeds).localCheckpoint(eager=True)
+    arr = _relax(
+        e, seed_df.withColumn("arr", F.lit(_origin).cast("long")),
+        lambda j: j.filter(F.col("t") >= F.col("arr"))
+        .select(F.col("v").alias("node"), F.col("t").alias("arr")),
+        max_hops, metrics,
     )
-    arr = seed_df.withColumn("arr", F.lit(_origin).cast("long"))
-    frontier = arr
-    rounds = 0
-    converged = False
-    for _ in range(max_hops):
-        rounds += 1
-        relaxed = (
-            frontier.join(e, (frontier.node == e.u) & (e.t >= frontier.arr))
-            .select(F.col("v").alias("node"), F.col("t").alias("arr"))
-            .groupBy("node")
-            .agg(F.min("arr").alias("arr"))
-        )
-        improved = (
-            relaxed.alias("r")
-            .join(arr.alias("d"), "node", "left")
-            .filter(F.col("d.arr").isNull() | (F.col("r.arr") < F.col("d.arr")))
-            .select("node", F.col("r.arr").alias("arr"))
-            .localCheckpoint(eager=True)
-        )
-        if improved.limit(1).count() == 0:
-            converged = True
-            break
-        arr = (
-            arr.join(improved.select("node"), "node", "left_anti")
-            .unionByName(improved)
-            .localCheckpoint(eager=True)
-        )
-        frontier = improved
-    if metrics is not None:
-        metrics["rounds"] = rounds
-        metrics["converged"] = converged
     return arr.join(
         seed_df.withColumn("_seed", F.lit(True)), "node", "left"
     ).select(
@@ -886,6 +870,47 @@ def link_prediction(
     )
 
 
+def _label_fixpoint(
+    labels: DataFrame,
+    e: DataFrame,
+    agg: Callable[[str], Column],
+    push: Column,
+    max_rounds: int,
+) -> tuple[DataFrame, int, bool]:
+    """Push labels along ``e`` (``u -> v``) until nothing moves.
+
+    ``labels`` is ``(node, <label>)`` over every node. Each round every
+    node's label becomes ``agg`` (``F.min`` or ``F.max``) over its own
+    label and ``push`` (an expression over the label column) of each
+    in-neighbour's label: one equi-join + one aggregate, checkpointed,
+    then a ``limit(1)`` probe for any changed label. Returns
+    ``(labels, rounds, converged)``; ``converged`` is False when
+    ``max_rounds`` ran out first."""
+    lab = labels.columns[1]
+    labels = labels.localCheckpoint(eager=True)
+    for rounds in range(1, max_rounds + 1):
+        pushed = labels.join(e, labels.node == e.u).select(
+            F.col("v").alias("node"), push.alias(lab)
+        )
+        new = (
+            labels.unionByName(pushed)
+            .groupBy("node")
+            .agg(agg(lab).alias(lab))
+            .localCheckpoint(eager=True)
+        )
+        moved = (
+            new.alias("n")
+            .join(labels.alias("o"), "node")
+            .filter(F.col(f"n.{lab}") != F.col(f"o.{lab}"))
+            .limit(1)
+            .count()
+        )
+        labels = new
+        if moved == 0:
+            return labels, rounds, True
+    return labels, max_rounds, False
+
+
 def strongly_connected_components(
     edges: DataFrame,
     src: str = "src",
@@ -970,30 +995,10 @@ def strongly_connected_components(
             break
         peels += 1  # counts FW-BW phases; trim-only resolution costs none
         # --- forward min-label coloring to fixpoint -------------------
-        color = remaining.select("node", F.col("node").alias("color")).localCheckpoint(
-            eager=True
+        color, _, _ = _label_fixpoint(
+            remaining.select("node", F.col("node").alias("color")),
+            e_rem, F.min, F.col("color"), max_prop,
         )
-        for _ in range(max_prop):
-            pushed = (
-                color.join(e_rem, color.node == e_rem.u)
-                .select(F.col("v").alias("node"), "color")
-            )
-            newc = (
-                color.unionByName(pushed)
-                .groupBy("node")
-                .agg(F.min("color").alias("color"))
-                .localCheckpoint(eager=True)
-            )
-            moved = (
-                newc.alias("n")
-                .join(color.alias("o"), "node")
-                .filter(F.col("n.color") != F.col("o.color"))
-                .limit(1)
-                .count()
-            )
-            color = newc
-            if moved == 0:
-                break
         # --- backward sweep from roots within color classes -----------
         member = color.filter(F.col("node") == F.col("color")).localCheckpoint(
             eager=True
@@ -1074,37 +1079,19 @@ def topo_levels(
         .unionByName(e.select(F.col("v").alias("node")))
         .distinct()
     )
-    lvl = nodes.withColumn("level", F.lit(0).cast("long")).localCheckpoint(eager=True)
-    rounds = 0
-    for _ in range(max_iter):
-        rounds += 1
-        pushed = (
-            lvl.join(e, lvl.node == e.u)
-            .select(F.col("v").alias("node"), (F.col("level") + 1).alias("level"))
-        )
-        newl = (
-            lvl.unionByName(pushed)
-            .groupBy("node")
-            .agg(F.max("level").alias("level"))
-            .localCheckpoint(eager=True)
-        )
-        moved = (
-            newl.alias("n")
-            .join(lvl.alias("o"), "node")
-            .filter(F.col("n.level") != F.col("o.level"))
-            .limit(1)
-            .count()
-        )
-        lvl = newl
-        if moved == 0:
-            if metrics is not None:
-                metrics["rounds"] = rounds
-                metrics["converged"] = True
-            return lvl.select(F.col("node").alias("node_id"), "level")
-    raise ValueError(
-        f"topo_levels did not converge in {max_iter} rounds "
-        "(cyclic input or depth > max_iter)"
+    lvl, rounds, converged = _label_fixpoint(
+        nodes.withColumn("level", F.lit(0).cast("long")),
+        e, F.max, F.col("level") + 1, max_iter,
     )
+    if not converged:
+        raise ValueError(
+            f"topo_levels did not converge in {max_iter} rounds "
+            "(cyclic input or depth > max_iter)"
+        )
+    if metrics is not None:
+        metrics["rounds"] = rounds
+        metrics["converged"] = True
+    return lvl.select(F.col("node").alias("node_id"), "level")
 
 
 def communities_lpa(

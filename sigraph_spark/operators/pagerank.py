@@ -22,20 +22,104 @@ Design decisions, all scale-motivated:
 * **One shuffle per iteration**: contributions join ranks to edges on
   ``src`` (both sides hash-partitioned on the node key; ranks are the
   small side and broadcast under AQE when they fit), then aggregate on
-  ``dst``. Degrees are computed once, outside the loop.
+  ``dst``. Out-weights are computed once, outside the loop.
 * **Dangling nodes** (no out-edges) absorb rank: their mass is NOT
   redistributed (the classic simplification; documented so the oracle
-  matches). Every node still receives the (1-d)/N teleport term.
+  matches). Every node still receives its teleport term.
+
+**The recurrence.** Every variant runs the same loop,
+``_power_iterate``. With ``d = damping_pct``, ``w(u, v)`` the edge
+weight and ``W(u)`` the summed out-weight of ``u``, each round computes,
+in BIGINT with floor division::
+
+    r'(v) = t(v) + (d * sum over edges u->v of (r(u) * w(u, v)) DIV W(u)) DIV 100
+
+The variants differ only in three inputs (``N`` nodes, ``S`` seeds):
+
+* ``pagerank``: ``w = 1`` over distinct pairs; ``r_0 = SCALE DIV N``;
+  ``t = ((100 - d) * SCALE) DIV (100 * N)``.
+* ``pagerank_weighted``: ``w`` = the pair's summed weight; ``r_0`` and
+  ``t`` as in ``pagerank``.
+* ``pagerank_resume``: as ``pagerank``, but ``r_0`` is the stored rank
+  where there is one, else ``SCALE DIV N``.
+* ``personalized_pagerank``: ``w = 1``; ``r_0 = SCALE DIV S`` and
+  ``t = ((100 - d) * SCALE) DIV (100 * S)`` on seeds, both 0 elsewhere.
+
+With ``w = 1`` over distinct pairs, ``W(u)`` is the out-degree and
+``(r * 1) DIV W(u)`` is exactly ``r DIV outdeg(u)``, the form the
+unweighted oracles restate.
 """
 
 from __future__ import annotations
 
-from functools import reduce
-
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 SCALE = 10**12
+
+
+def _distinct_edges(edges: DataFrame, src: str, dst: str) -> DataFrame:
+    """Distinct ``(src, dst)`` string pairs, each with weight ``w = 1``."""
+    return (
+        edges.select(
+            F.col(src).cast("string").alias("src"),
+            F.col(dst).cast("string").alias("dst"),
+        )
+        .distinct()
+        .withColumn("w", F.lit(1).cast("long"))
+    )
+
+
+def _nodes(e: DataFrame) -> DataFrame:
+    return (
+        e.select(F.col("src").alias("node"))
+        .unionByName(e.select(F.col("dst").alias("node")))
+        .distinct()
+    )
+
+
+def _empty(nodes: DataFrame) -> DataFrame:
+    return nodes.select(
+        "node", F.lit(0).cast("long").alias("rank_fp"), F.lit(0.0).alias("rank")
+    )
+
+
+def _power_iterate(
+    e: DataFrame,
+    nodes: DataFrame,
+    ranks: DataFrame,
+    teleport: Column,
+    damping_pct: int,
+    iterations: int,
+) -> DataFrame:
+    """Run the module's recurrence ``iterations`` times: ``e`` holds
+    ``(src, dst, w)``, ``ranks`` the starting ``(node, rank_fp)`` and
+    ``teleport`` is evaluated over ``nodes`` (which may carry the
+    columns it reads). Returns ``(node, rank_fp, rank)``."""
+    wsum = e.groupBy("src").agg(F.sum("w").alias("wtot"))
+    for _ in range(iterations):
+        contrib = (
+            e.join(ranks.withColumnRenamed("node", "src"), "src")
+            .join(wsum, "src")
+            .select(
+                F.col("dst").alias("node"),
+                F.expr("(rank_fp * w) DIV wtot").alias("c"),
+            )
+        )
+        summed = contrib.groupBy("node").agg(F.sum("c").alias("s"))
+        ranks = nodes.join(summed, "node", "left").select(
+            "node",
+            (teleport + F.expr(f"({damping_pct} * coalesce(s, 0)) DIV 100"))
+            .cast("long")
+            .alias("rank_fp"),
+        )
+        # each round's plan nests the previous one; at gate scale the
+        # nested plan is fine and keeps the computation lazily explainable
+    return ranks.select(
+        "node",
+        "rank_fp",
+        F.round(F.col("rank_fp") / F.lit(SCALE), 6).alias("rank"),
+    )
 
 
 def pagerank(
@@ -52,56 +136,14 @@ def pagerank(
     ``damping_pct`` is an integer percentage so every multiplication stays
     in exact BIGINT arithmetic end-to-end.
     """
-    e = edges.select(
-        F.col(src).cast("string").alias("src"),
-        F.col(dst).cast("string").alias("dst"),
-    ).distinct()
-    nodes = (
-        e.select(F.col("src").alias("node"))
-        .unionByName(e.select(F.col("dst").alias("node")))
-        .distinct()
-    )
+    e = _distinct_edges(edges, src, dst)
+    nodes = _nodes(e)
     n = nodes.count()  # one small job; N is needed as an exact literal
     if n == 0:
-        return nodes.select(
-            "node",
-            F.lit(0).cast("long").alias("rank_fp"),
-            F.lit(0.0).alias("rank"),
-        )
-    outdeg = e.groupBy("src").agg(F.count("*").alias("deg"))
-    teleport = ((100 - damping_pct) * SCALE) // (100 * n)
-    ranks = nodes.select("node", F.lit(SCALE // n).cast("long").alias("rank_fp"))
-    for _ in range(iterations):
-        contrib = (
-            e.join(ranks.withColumnRenamed("node", "src"), "src")
-            .join(outdeg, "src")
-            .select(
-                F.col("dst").alias("node"),
-                F.expr("rank_fp DIV deg").alias("c"),
-            )
-        )
-        summed = contrib.groupBy("node").agg(F.sum("c").alias("s"))
-        ranks = (
-            nodes.join(summed, "node", "left")
-            .select(
-                "node",
-                (
-                    F.lit(teleport)
-                    + F.expr(
-                        f"({damping_pct} * coalesce(s, 0)) DIV 100"
-                    )
-                ).cast("long").alias("rank_fp"),
-            )
-        )
-        # keep lineage bounded: each round's plan is small, but 10+ rounds
-        # of joins still nest — localCheckpoint would truncate on a real
-        # cluster run; at gate scale the nested plan is fine and keeps the
-        # whole computation lazily explainable
-    return ranks.select(
-        "node",
-        "rank_fp",
-        F.round(F.col("rank_fp") / F.lit(SCALE), 6).alias("rank"),
-    )
+        return _empty(nodes)
+    start = nodes.select("node", F.lit(SCALE // n).cast("long").alias("rank_fp"))
+    teleport = F.lit(((100 - damping_pct) * SCALE) // (100 * n))
+    return _power_iterate(e, nodes, start, teleport, damping_pct, iterations)
 
 
 def pagerank_weighted(
@@ -132,43 +174,13 @@ def pagerank_weighted(
     mx = e.agg(F.max("w").alias("m")).collect()[0]["m"]
     if mx is not None and mx > 9_000_000:
         raise ValueError(f"edge weight {mx} exceeds fixed-point headroom")
-    nodes = (
-        e.select(F.col("src").alias("node"))
-        .unionByName(e.select(F.col("dst").alias("node")))
-        .distinct()
-    )
+    nodes = _nodes(e)
     n = nodes.count()
     if n == 0:
-        return nodes.select(
-            "node", F.lit(0).cast("long").alias("rank_fp"),
-            F.lit(0.0).alias("rank"))
-    wsum = e.groupBy("src").agg(F.sum("w").alias("wtot"))
-    teleport = ((100 - damping_pct) * SCALE) // (100 * n)
-    ranks = nodes.select("node",
-                         F.lit(SCALE // n).cast("long").alias("rank_fp"))
-    for _ in range(iterations):
-        contrib = (
-            e.join(ranks.withColumnRenamed("node", "src"), "src")
-            .join(wsum, "src")
-            .select(
-                F.col("dst").alias("node"),
-                F.expr("(rank_fp * w) DIV wtot").alias("c"),
-            )
-        )
-        summed = contrib.groupBy("node").agg(F.sum("c").alias("s"))
-        ranks = (
-            nodes.join(summed, "node", "left")
-            .select(
-                "node",
-                (F.lit(teleport)
-                 + F.expr(f"({damping_pct} * coalesce(s, 0)) DIV 100"))
-                .cast("long").alias("rank_fp"),
-            )
-        )
-    return ranks.select(
-        "node", "rank_fp",
-        F.round(F.col("rank_fp") / F.lit(SCALE), 6).alias("rank"),
-    )
+        return _empty(nodes)
+    start = nodes.select("node", F.lit(SCALE // n).cast("long").alias("rank_fp"))
+    teleport = F.lit(((100 - damping_pct) * SCALE) // (100 * n))
+    return _power_iterate(e, nodes, start, teleport, damping_pct, iterations)
 
 
 def pagerank_weighted_oracle_sql(
@@ -220,7 +232,6 @@ FROM {prev}
     # (exactly like pagerank_oracle_sql)
     return sql.lstrip()
 
-
 def pagerank_resume(
     edges: DataFrame,
     prior_ranks: DataFrame,
@@ -244,58 +255,17 @@ def pagerank_resume(
     engines and partitionings, so the oracle replays both phases
     exactly. One shuffle per round, degrees computed once.
     """
-    e = edges.select(
-        F.col(src).cast("string").alias("src"),
-        F.col(dst).cast("string").alias("dst"),
-    ).distinct()
-    nodes = (
-        e.select(F.col("src").alias("node"))
-        .unionByName(e.select(F.col("dst").alias("node")))
-        .distinct()
-    )
+    e = _distinct_edges(edges, src, dst)
+    nodes = _nodes(e)
     n = nodes.count()
     if n == 0:
-        return nodes.select(
-            "node",
-            F.lit(0).cast("long").alias("rank_fp"),
-            F.lit(0.0).alias("rank"),
-        )
-    outdeg = e.groupBy("src").agg(F.count("*").alias("deg"))
-    teleport = ((100 - damping_pct) * SCALE) // (100 * n)
-    ranks = (
-        nodes.join(prior_ranks.select("node", "rank_fp"), "node", "left")
-        .select(
-            "node",
-            F.coalesce(F.col("rank_fp"), F.lit(SCALE // n))
-            .cast("long")
-            .alias("rank_fp"),
-        )
-    )
-    for _ in range(iterations):
-        contrib = (
-            e.join(ranks.withColumnRenamed("node", "src"), "src")
-            .join(outdeg, "src")
-            .select(
-                F.col("dst").alias("node"),
-                F.expr("rank_fp DIV deg").alias("c"),
-            )
-        )
-        summed = contrib.groupBy("node").agg(F.sum("c").alias("s"))
-        ranks = (
-            nodes.join(summed, "node", "left")
-            .select(
-                "node",
-                (
-                    F.lit(teleport)
-                    + F.expr(f"({damping_pct} * coalesce(s, 0)) DIV 100")
-                ).cast("long").alias("rank_fp"),
-            )
-        )
-    return ranks.select(
+        return _empty(nodes)
+    start = nodes.join(prior_ranks.select("node", "rank_fp"), "node", "left").select(
         "node",
-        "rank_fp",
-        F.round(F.col("rank_fp") / F.lit(SCALE), 6).alias("rank"),
+        F.coalesce(F.col("rank_fp"), F.lit(SCALE // n)).cast("long").alias("rank_fp"),
     )
+    teleport = F.lit(((100 - damping_pct) * SCALE) // (100 * n))
+    return _power_iterate(e, nodes, start, teleport, damping_pct, iterations)
 
 
 def pagerank_oracle_sql(
@@ -366,7 +336,6 @@ SELECT node, rank_fp, round(rank_fp / {SCALE}.0, 6) AS rank FROM {prev}
 """
     return sql
 
-
 def personalized_pagerank(
     edges: DataFrame,
     seeds: DataFrame,
@@ -389,15 +358,8 @@ def personalized_pagerank(
     per round; the seed marker rides the node list as a broadcast-size
     column, adding no extra exchange.
     """
-    e = edges.select(
-        F.col(src).cast("string").alias("src"),
-        F.col(dst).cast("string").alias("dst"),
-    ).distinct()
-    nodes = (
-        e.select(F.col("src").alias("node"))
-        .unionByName(e.select(F.col("dst").alias("node")))
-        .distinct()
-    )
+    e = _distinct_edges(edges, src, dst)
+    nodes = _nodes(e)
     seed = seeds.select(
         F.col(seeds.columns[0]).cast("string").alias("node")
     ).distinct().join(nodes, "node")  # seeds outside the graph carry no mass
@@ -407,36 +369,13 @@ def personalized_pagerank(
     marked = nodes.join(
         seed.withColumn("_is_seed", F.lit(True)), "node", "left"
     ).select("node", F.coalesce("_is_seed", F.lit(False)).alias("_is_seed"))
-    teleport = F.when(
-        F.col("_is_seed"), F.lit(((100 - damping_pct) * SCALE) // (100 * ns))
-    ).otherwise(F.lit(0)).cast("long")
-    outdeg = e.groupBy("src").agg(F.count("*").alias("deg"))
-    ranks = marked.select(
-        "node",
-        F.when(F.col("_is_seed"), F.lit(SCALE // ns))
-        .otherwise(F.lit(0)).cast("long").alias("rank_fp"),
-    )
-    for _ in range(iterations):
-        contrib = (
-            e.join(ranks.withColumnRenamed("node", "src"), "src")
-            .join(outdeg, "src")
-            .select(F.col("dst").alias("node"), F.expr("rank_fp DIV deg").alias("c"))
-        )
-        summed = contrib.groupBy("node").agg(F.sum("c").alias("s"))
-        ranks = (
-            marked.join(summed, "node", "left")
-            .select(
-                "node",
-                (
-                    teleport
-                    + F.expr(f"({damping_pct} * coalesce(s, 0)) DIV 100")
-                ).cast("long").alias("rank_fp"),
-            )
-        )
-    return ranks.select(
-        "node", "rank_fp",
-        F.round(F.col("rank_fp") / F.lit(SCALE), 6).alias("rank"),
-    )
+
+    def on_seeds(value: int) -> Column:
+        return F.when(F.col("_is_seed"), F.lit(value)).otherwise(F.lit(0)).cast("long")
+
+    start = marked.select("node", on_seeds(SCALE // ns).alias("rank_fp"))
+    teleport = on_seeds(((100 - damping_pct) * SCALE) // (100 * ns))
+    return _power_iterate(e, marked, start, teleport, damping_pct, iterations)
 
 
 def ppr_oracle_sql(

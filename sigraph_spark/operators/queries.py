@@ -210,15 +210,17 @@ def ordered_sequences(
     trace_id: str | None = None,
 ) -> DataFrame:
     """Syslog sequence retrieval (reference db_session.py:155-214, F1):
-    filter by unit (and optionally trace), storage order (timestamp, doc_id)
-    then the reference's second sort by the payload Timestamp string —
-    replicated via sort_array over (payload_ts, struct) pairs."""
+    filter by unit (and optionally trace), one sequence per trace ordered
+    by the payload Timestamp string (the reference's second sort), ties
+    by ``doc_id``. ``array_sort`` over ``(payload_ts, doc_id, payload)`` structs
+    fixes the order completely, so no sort runs before ``collect_list``
+    (an ``orderBy`` there would cost a range-partitioned exchange and a
+    sampling job and change nothing)."""
     d = docs.filter(F.col("unit_id") == unit_id)
     if trace_id is not None:
         d = d.filter(F.col("trace_id") == trace_id)
     return (
-        d.orderBy("timestamp", "doc_id")
-        .groupBy("trace_id")
+        d.groupBy("trace_id")
         .agg(
             F.array_sort(
                 F.collect_list(

@@ -454,3 +454,48 @@ def test_keyset_pagination_covers_listing_exactly(spark):
         seen.extend((r["v"], r["id"]) for r in got)
         after = page_cursor(page, keys)
     assert seen == sorted((r[2], r[0]) for r in rows)
+
+
+def test_ordered_sequences_sorted_by_payload_time_then_doc_id(spark):
+    """One sequence per trace of the unit, ordered by (payload Timestamp,
+    doc_id) whatever the storage order or partitioning; ``trace_id``
+    keeps one trace."""
+    from sigraph_spark.operators.queries import ordered_sequences
+
+    sec = dt.timedelta(seconds=1)
+    rows = [
+        # doc_id, unit, trace, storage timestamp, payload Timestamp
+        ("d3", "u1", "t1", TS, "2024-01-01 12:00:05"),
+        ("d1", "u1", "t1", TS + sec, "2024-01-01 12:00:09"),
+        ("d2", "u1", "t1", TS + 2 * sec, "2024-01-01 12:00:05"),  # tie with d3
+        ("d4", "u1", "t2", TS, "2024-01-01 12:00:01"),
+        ("d5", "u1", "t2", TS + sec, "2024-01-01 12:00:00"),
+        ("d6", "u2", "t1", TS, "2024-01-01 11:00:00"),  # other unit
+    ]
+    docs = spark.createDataFrame(
+        [(d, u, t, ts, (p, f"{d}.exe")) for d, u, t, ts, p in rows],
+        "doc_id string, unit_id string, trace_id string, timestamp timestamp, "
+        "raw_data struct<Timestamp:string,Image:string>",
+    ).repartition(3, "doc_id")
+    assert docs.rdd.getNumPartitions() >= 2
+
+    def sequences(**kw):
+        return {
+            r["trace_id"]: [
+                (x["payload_ts"], x["doc_id"], x["payload"]["Image"])
+                for x in r["sequence"]
+            ]
+            for r in ordered_sequences(docs, "u1", **kw).collect()
+        }
+
+    t1 = [
+        ("2024-01-01 12:00:05", "d2", "d2.exe"),
+        ("2024-01-01 12:00:05", "d3", "d3.exe"),
+        ("2024-01-01 12:00:09", "d1", "d1.exe"),
+    ]
+    t2 = [
+        ("2024-01-01 12:00:00", "d5", "d5.exe"),
+        ("2024-01-01 12:00:01", "d4", "d4.exe"),
+    ]
+    assert sequences() == {"t1": t1, "t2": t2}
+    assert sequences(trace_id="t1") == {"t1": t1}

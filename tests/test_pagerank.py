@@ -4,8 +4,18 @@ bit-identity with the unrolled-CTE SQL restatement."""
 from __future__ import annotations
 
 import duckdb
+import pytest
 
-from sigraph_spark.operators.pagerank import SCALE, pagerank, pagerank_oracle_sql
+from sigraph_spark.operators.pagerank import (
+    SCALE,
+    pagerank,
+    pagerank_oracle_sql,
+    pagerank_resume,
+    pagerank_weighted,
+    pagerank_weighted_oracle_sql,
+    personalized_pagerank,
+    ppr_oracle_sql,
+)
 
 EDGES = [
     ("a", "b"),
@@ -15,6 +25,10 @@ EDGES = [
     ("d", "c"),  # d is a source-only node (gets teleport share only)
     ("c", "a"),  # duplicate edge — must collapse
 ]
+
+
+# one weight per EDGES row; the duplicate c->a pair sums to 4 + 6
+WEIGHTED = [(s, d, i + 1) for i, (s, d) in enumerate(EDGES)]
 
 
 def _edges_df(spark, partitions=1):
@@ -53,18 +67,51 @@ def test_pagerank_partition_order_invariant(spark):
     assert a == b
 
 
-def test_pagerank_matches_duckdb_oracle(spark):
+def _resumed(edges):
+    """Cold ranks over the graph without d's edge (so d starts at the
+    uniform share), resumed for 3 rounds over the full graph."""
+    prior = pagerank(edges.filter("src <> 'd'"), iterations=2)
+    return pagerank_resume(edges, prior.select("node", "rank_fp"), iterations=3)
+
+
+def _seeded_at_a(edges):
+    seeds = edges.sparkSession.createDataFrame([("a",)], "node string")
+    return personalized_pagerank(edges, seeds)
+
+
+@pytest.mark.parametrize(
+    "operator, oracle",
+    [
+        pytest.param(pagerank, pagerank_oracle_sql("edges"), id="pagerank"),
+        pytest.param(
+            pagerank_weighted,
+            pagerank_weighted_oracle_sql("edges"),
+            id="pagerank_weighted",
+        ),
+        pytest.param(
+            _resumed,
+            "base_e AS (SELECT src, dst FROM edges WHERE src <> 'd'),"
+            + pagerank_oracle_sql(
+                "base_e", prefix="pb_", iterations=2, final_select=False
+            )
+            + ","
+            + pagerank_oracle_sql("edges", prefix="pw_", iterations=3, init_rel="pb_r2"),
+            id="pagerank_resume",
+        ),
+        pytest.param(
+            _seeded_at_a, ppr_oracle_sql("edges", "node = 'a'"), id="personalized_pagerank"
+        ),
+    ],
+)
+def test_pagerank_matches_duckdb_oracle(spark, operator, oracle):
+    """Every variant of the shared power iteration is bit-identical to
+    its unrolled-CTE oracle."""
     con = duckdb.connect()
-    con.execute("CREATE TABLE edges AS SELECT * FROM (VALUES %s) t(src, dst)"
-                % ", ".join("('%s','%s')" % p for p in EDGES))
-    want = {
-        r[0]: (r[1], r[2])
-        for r in con.execute("WITH " + pagerank_oracle_sql("edges")).fetchall()
-    }
-    got = {
-        r["node"]: (r["rank_fp"], r["rank"])
-        for r in pagerank(_edges_df(spark)).collect()
-    }
+    con.execute("CREATE TABLE edges AS SELECT * FROM (VALUES %s) t(src, dst, weight)"
+                % ", ".join("('%s','%s',%d)" % r for r in WEIGHTED))
+    want = {r[0]: (r[1], r[2]) for r in con.execute("WITH " + oracle).fetchall()}
+    edges = spark.createDataFrame(WEIGHTED, "src string, dst string, weight long")
+    got = {r["node"]: (r["rank_fp"], r["rank"]) for r in operator(edges).collect()}
     assert got == want
 
 

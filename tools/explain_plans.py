@@ -391,8 +391,8 @@ def main() -> int:
     # hearst taxonomy: the pair aggregate materializes ONCE (r6 — it
     # feeds both legs of the reciprocal join, so the visible plan is a
     # broadcast self-join over the checkpointed vocabulary-sized table;
-    # the algebraic map-side combine now lives inside that boundary and
-    # is asserted on the un-checkpointed extraction via hearst_pairs)
+    # the algebraic map-side combine lives inside that boundary and is
+    # asserted by the hearst_pairs check below)
     check(
         "taxonomy_induction",
         E.q_taxonomy_induction(spark, sf_dir),
@@ -401,6 +401,20 @@ def main() -> int:
             "BatchEvalPython", "ArrowEvalPython", "CartesianProduct",
             "SortMergeJoin",
         ),
+    )
+    # hearst pairs: taxonomy_edges' pair aggregate WITHOUT its checkpoint,
+    # over the pure-Column extraction — map-side partial_count combines
+    # the Zipfian pattern heads before the exchange; no Python eval
+    from pyspark.sql import functions as F
+
+    check(
+        "hearst_pairs",
+        E.q_hearst_pairs(spark, sf_dir).groupBy("hypo", "hyper").agg(
+            F.count(F.lit(1)).alias("n_mentions"),
+            F.countDistinct("pattern").alias("n_patterns"),
+        ),
+        want=("partial_count",),
+        forbid=("BatchEvalPython", "ArrowEvalPython", "CartesianProduct"),
     )
     # text reuse: df-cut anti-join + gram equi-join; islands window is
     # partitioned (never a global sort of the match table)
